@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftbridge.ContextBridge
 
 import graft.functions.{DotVec, MinhashSignatures, SortedIntersectCount, ValidateWebLog, WindowMinima}
+import graft.storage.GraftLocalFileSystem
 
 /** Session-extension entry point: makes the engine's native expressions
   * first-class SQL functions on any session built with
@@ -16,6 +18,13 @@ import graft.functions.{DotVec, MinhashSignatures, SortedIntersectCount, Validat
   * registration calls needed. The same functions are also registered
   * imperatively by their call sites (Validator, Dedup) so ad-hoc
   * sessions keep working.
+  *
+  * It also installs graft's fork-free local filesystem
+  * ([[graft.storage.GraftLocalFileSystem.install]]) on the active
+  * SparkContext's Hadoop configuration. `spark.sql.extensions` applies
+  * the extension once the context exists; `withExtensions` applies it
+  * when called, so on a builder that will create the first context it
+  * installs nothing and the session keeps Hadoop's local filesystem.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -23,6 +32,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ContextBridge.active.foreach(sc => GraftLocalFileSystem.install(sc.hadoopConfiguration))
+
     // SQL UPDATE / MERGE INTO on graft catalog tables (the analyzer
     // bridge into IcebergLikeTable.update / mergeInto)
     ext.injectPostHocResolutionRule(session =>
