@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.weblog.Validator
+import graft.functions.NativeFunctions
 
 /** The interactive query surface (SURVEY.md §3.3): the reference gives
   * analysts "any SQL over the cataloged tables" through an Athena
@@ -16,7 +16,8 @@ import graft.weblog.Validator
 final class Engine(val spark: SparkSession,
     resultLocation: Option[String] = None) {
 
-  Validator.register(spark) // expose validate_weblog_A/B in SQL too
+  // graft's native SQL functions, for sessions built without GraftExtensions
+  NativeFunctions.register(spark)
 
   private val named = scala.collection.concurrent.TrieMap[String, String](
     // the reference's named queries, modulo table names

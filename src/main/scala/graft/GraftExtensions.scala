@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftbridge.ContextBridge
 
-import graft.functions.{DotVec, MinhashSignatures, SortedIntersectCount, ValidateWebLog, WindowMinima}
+import graft.functions.NativeFunctions
 import graft.storage.GraftLocalFileSystem
 
 /** Session-extension entry point: makes the engine's native expressions
@@ -15,9 +14,11 @@ import graft.storage.GraftLocalFileSystem
   *
   * (or `SparkSession.builder.withExtensions(new GraftExtensions)`), the
   * standard install path for a Spark-native library — no per-session
-  * registration calls needed. The same functions are also registered
-  * imperatively by their call sites (Validator, Dedup) so ad-hoc
-  * sessions keep working.
+  * registration calls needed. Every entry of
+  * [[graft.functions.NativeFunctions]] is injected; the engine's own
+  * operators build the same expressions directly
+  * ([[graft.functions.NativeFunctions.call]]), so they need neither the
+  * extension nor a registration.
   *
   * It also installs graft's fork-free local filesystem
   * ([[graft.storage.GraftLocalFileSystem.install]]) on the active
@@ -28,9 +29,6 @@ import graft.storage.GraftLocalFileSystem
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ContextBridge.active.foreach(sc => GraftLocalFileSystem.install(sc.hadoopConfiguration))
 
@@ -39,52 +37,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPostHocResolutionRule(session =>
       graft.sources.GraftDmlRule(session))
 
-    ext.injectFunction((
-      FunctionIdentifier(SortedIntersectCount.FnName),
-      info(SortedIntersectCount.FnName,
-        "_FUNC_(a, b) - |a ∩ b| of two sorted bigint arrays (merge loop)"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-
-    ext.injectFunction((
-      FunctionIdentifier(DotVec.FnName),
-      info(DotVec.FnName,
-        "_FUNC_(a, b) - dot product of two float/double arrays (double fold)"),
-      (exprs: Seq[Expression]) => DotVec(exprs(0), exprs(1))))
-
-    ext.injectFunction((
-      FunctionIdentifier(MinhashSignatures.FnName),
-      info(MinhashSignatures.FnName,
-        "_FUNC_(hashes, k) - k-wide MinHash signature of a shingle-hash set"),
-      (exprs: Seq[Expression]) => exprs(1) match {
-        case Literal(k: Int, _) => MinhashSignatures(exprs.head, k)
-        case other => throw new IllegalArgumentException(
-          s"${MinhashSignatures.FnName} k must be an int literal, got $other")
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier(WindowMinima.FnName),
-      info(WindowMinima.FnName,
-        "_FUNC_(arr, w) - sliding-window minima of a bigint/string array"),
-      (exprs: Seq[Expression]) => exprs(1) match {
-        case Literal(w: Int, _) => WindowMinima(exprs.head, w)
-        case other => throw new IllegalArgumentException(
-          s"${WindowMinima.FnName} w must be an int literal, got $other")
-      }))
-
-    for (dialect <- Seq("a", "b")) {
-      val name = s"validate_weblog_$dialect"
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        info(name, s"_FUNC_(payload) - strict dialect-${dialect.toUpperCase} " +
-          "web-log validation -> struct<valid, reason>"),
-        (exprs: Seq[Expression]) => ValidateWebLog(exprs.head, dialect.toUpperCase)))
-    }
+    NativeFunctions.all.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
   }
 }
 
 object GraftExtensions {
   /** Injected SQL function names (for discovery/tests). */
-  val names: Seq[String] = Seq(
-    SortedIntersectCount.FnName, MinhashSignatures.FnName, DotVec.FnName,
-    WindowMinima.FnName, "validate_weblog_a", "validate_weblog_b")
+  val names: Seq[String] = NativeFunctions.all.map(_.name)
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** `bloom_might_contain(hash, filter_bytes)` — membership probe of a
@@ -59,17 +58,4 @@ object BloomMightContain {
     bloom.writeTo(bos)
     bos.toByteArray
   }
-
-  /** Idempotently register the SQL function on the session. The second
-    * argument must be a binary literal (the serialized filter).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => exprs(1) match {
-        case Literal(bytes: Array[Byte], BinaryType) => BloomMightContain(exprs(0), bytes)
-        case other => throw new IllegalArgumentException(
-          s"$FnName expects a foldable binary filter argument, got $other")
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -99,9 +98,4 @@ case class DotVec(left: Expression, right: Expression) extends BinaryExpression 
 
 object DotVec {
   val FnName = "dot_vec"
-
-  /** Idempotently register the SQL function on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => DotVec(exprs(0), exprs(1)), "built-in")
 }

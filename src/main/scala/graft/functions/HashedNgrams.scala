@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -77,16 +76,4 @@ case class HashedNgrams(child: Expression, n: Int) extends UnaryExpression {
 
 object HashedNgrams {
   val FnName = "hashed_ngrams"
-
-  /** Idempotently register `hashed_ngrams(wh, n)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => {
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"hashed_ngrams n must be an int literal, got $other")
-        }
-        HashedNgrams(exprs.head, n)
-      }, "built-in")
 }

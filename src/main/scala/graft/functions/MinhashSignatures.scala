@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,16 +78,4 @@ object MinhashSignatures {
     x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
     x ^ (x >>> 31)
   }
-
-  /** Idempotently register `minhash_sigs(hashes, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_sigs k must be an int literal, got $other")
-        }
-        MinhashSignatures(exprs.head, k)
-      }, "built-in")
 }

@@ -2,9 +2,8 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -169,19 +168,4 @@ object RefJaccardPairs {
   def deserialize(bytes: Array[Byte]): Index =
     new ObjectInputStream(new ByteArrayInputStream(bytes))
       .readObject().asInstanceOf[Index]
-
-  /** Idempotently register the SQL function. Arguments: the shingle
-    * array, a foldable binary index, a foldable double threshold.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => (exprs(1), exprs(2)) match {
-        case (Literal(bytes: Array[Byte], BinaryType), Literal(t: Double, DoubleType)) =>
-          RefJaccardPairs(exprs(0), bytes, t)
-        case other => throw new IllegalArgumentException(
-          s"$FnName expects (shingles, binary index literal, double " +
-            s"threshold literal), got $other")
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,9 +63,4 @@ case class SimhashFromHashes(child: Expression) extends UnaryExpression {
 
 object SimhashFromHashes {
   val FnName = "simhash_from_hashes"
-
-  /** Idempotently register `simhash_from_hashes(arr)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => SimhashFromHashes(exprs.head), "built-in")
 }

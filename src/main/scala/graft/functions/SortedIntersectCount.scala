@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -76,9 +75,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
 object SortedIntersectCount {
   val FnName = "sorted_intersect_count"
-
-  /** Idempotently register the SQL function on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,16 +75,4 @@ case class WindowMinima(child: Expression, w: Int) extends UnaryExpression {
 
 object WindowMinima {
   val FnName = "window_minima"
-
-  /** Idempotently register `window_minima(arr, w)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => {
-        val w = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"window_minima w must be an int literal, got $other")
-        }
-        WindowMinima(exprs.head, w)
-      }, "built-in")
 }

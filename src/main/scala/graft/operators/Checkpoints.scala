@@ -67,9 +67,7 @@ object Checkpoints {
     * Measured cost of the clone (r16, interleaved quiet-machine A/B on
     * q_pagerank/q_markov_attribution): within rep-to-rep noise of the
     * shared-session mutation it replaces (cloneSession ≈ 2–8 ms,
-    * per-action cost identical); `spark.graft.iterate.clone=false`
-    * selects the old mutate-and-restore behavior (single-threaded
-    * callers only) as the measured fallback.
+    * per-action cost identical).
     */
   val IterateAqeKey = "spark.graft.iterate.aqe"
   val IterateRowsPerPartitionKey = "spark.graft.iterate.rowsPerPartition"
@@ -82,31 +80,11 @@ object Checkpoints {
       val sessionParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
       val loopParts = math.max(1L, math.min(sessionParts.toLong,
         (loopRows + perPart - 1) / perPart)).toInt
-      val useClone = spark.conf.getOption("spark.graft.iterate.clone")
-        .forall(_.toBoolean)
-      if (useClone) {
-        val loopSession = org.apache.spark.sql.graftbridge.SessionBridge
-          .cloneSession(spark)
-        loopSession.conf.set("spark.sql.adaptive.enabled", "false")
-        loopSession.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-        body(loopSession)
-      } else {
-        val aqeKey = "spark.sql.adaptive.enabled"
-        val partsKey = "spark.sql.shuffle.partitions"
-        val prevAqe = spark.conf.getOption(aqeKey)
-        val prevParts = spark.conf.getOption(partsKey)
-        spark.conf.set(aqeKey, "false")
-        spark.conf.set(partsKey, loopParts.toString)
-        try body(spark)
-        finally {
-          def restore(key: String, prev: Option[String]): Unit = prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
-          restore(aqeKey, prevAqe)
-          restore(partsKey, prevParts)
-        }
-      }
+      val loopSession = org.apache.spark.sql.graftbridge.SessionBridge
+        .cloneSession(spark)
+      loopSession.conf.set("spark.sql.adaptive.enabled", "false")
+      loopSession.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+      body(loopSession)
     }
   }
 

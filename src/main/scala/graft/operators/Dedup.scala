@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{BloomMightContain, HashedNgrams, MinhashSignatures,
+  NativeFunctions, RefJaccardPairs, SimhashFromHashes, SortedIntersectCount}
+
 /** Document deduplication for large-scale training-data pipelines: exact
   * (hash-groupBy), normalized-exact, n-gram Jaccard (exact pairwise on
   * LSH-pruned candidates), MinHash+LSH, and SimHash. Everything is pure
@@ -63,9 +66,7 @@ object Dedup {
     */
   private[operators] def hashedNgramsAll(wh: Column, n: Int): Column =
     if (n == 1) wh
-    else org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.HashedNgrams(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(wh), n))
+    else NativeFunctions.call(HashedNgrams.FnName, wh, lit(n))
 
   /** Distinct hash-composed shingles over a materialized word-hash
     * array (n=1 → distinct word hashes).
@@ -122,10 +123,9 @@ object Dedup {
     // one more false positive for the exact confirm to absorb
     val bloom = aDig.select(xxhash64(col("content_hash")).as("_h"))
       .stat.bloomFilter("_h", expectedItems, fpp)
-    graft.functions.BloomMightContain.register(delta.sparkSession)
-    val bloomLit = lit(graft.functions.BloomMightContain.serialize(bloom))
+    val bloomLit = lit(BloomMightContain.serialize(bloom))
     val dDig = dig(delta)
-    val might = call_function(graft.functions.BloomMightContain.FnName,
+    val might = NativeFunctions.call(BloomMightContain.FnName,
       xxhash64(col("content_hash")), bloomLit)
     val candidates = dDig.filter(might).select("content_hash").distinct()
     // exact confirm: one archive-digest scan, candidates broadcast —
@@ -292,13 +292,6 @@ object Dedup {
         }
     }
 
-  /** The MinHash pipeline's front half, shared by the full core and the
-    * bench's candidate census: shingle-set collapse into `groups`
-    * (setkey → rep, members, shl — checkpointed, it feeds the LSH join
-    * fan-out and the member expansion), representatives' shingle sets,
-    * and the distinct cross-group LSH candidate pairs (each emitted
-    * once, from its first colliding band).
-    */
   /** The shingle/group/band-hash front shared by the FULL candidate
     * enumeration and the capped-fanout connectivity path: `groups`
     * (setkey → rep, members, shl), the representatives' shingle sets,
@@ -330,100 +323,42 @@ object Dedup {
     // cross-group LSH on representatives: the one-pass codegen'd
     // signature expression, then band hashes as flat long columns.
     // Checkpointed: it is both sides of every per-band join.
-    graft.functions.MinhashSignatures.register(df.sparkSession)
     val repSets = groups.select(col("rep").as("id"), col("shl"))
     val narrow = repSets
-      .select(col("id"), expr(s"minhash_sigs(shl, $k)").as("sig"))
+      .select(col("id"),
+        NativeFunctions.call(MinhashSignatures.FnName, col("shl"), lit(k)).as("sig"))
       .select(col("id") +: (0 until bands).map(j =>
         xxhash64(lit(j) +: (0 until r).map(i => col("sig")(j * r + i)): _*).as(s"_b$j")): _*)
       .localCheckpoint()
     (groups, repSets, narrow)
   }
 
-  /** Candidate-enumeration shape knob (r16):
-    * `spark.graft.dedup.lsh.shape = perband | exploded | chunked<c>` —
-    * default `perband`. All shapes emit each candidate pair EXACTLY
-    * once, at its first colliding band; the sets are identical by
-    * construction (census-pinned, A/B-verified byte-identical), only
-    * the plan differs. MEASURED (r16, cold, memo bypassed, interleaved,
-    * quiet local[32], sf0.1 probe corpora): per-band
-    * 4.8–9.2 s / 8.3–9.0 s (1×/10× near-dup density), exploded
-    * 2.3–2.7 s / **285–324 s**, i.e. the exploded join wins ~2× at low
-    * duplication and collapses ~35× at high duplication — the narrow
-    * rep frame fits the auto-broadcast threshold, so the per-band
-    * joins run as broadcast probes with no buffered key groups, while
-    * the 32×-row exploded side plans as a sort-merge join whose
-    * duplicate-key group buffering/replay is quadratic-in-bucket work
-    * per task at near-dup density. Default stays the shape that is
-    * robust to the duplication structure; the knob exists for cold
-    * A/Bs (IsoBench `SPARK_GRAFT_CONF`) and low-duplication corpora.
+  /** The MinHash pipeline's front half, shared by the full core and the
+    * bench's candidate census: shingle-set collapse into `groups`
+    * (setkey → rep, members, shl — checkpointed, it feeds the LSH join
+    * fan-out and the member expansion), representatives' shingle sets,
+    * and the distinct cross-group LSH candidate pairs (each emitted
+    * once, from its first colliding band).
     */
-  val LshShapeKey = "spark.graft.dedup.lsh.shape"
-
   private def minhashGroupsCandidates(df: DataFrame, textCol: String,
       idCol: String, n: Int, k: Int, bands: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val (groups, repSets, narrow) =
       minhashNarrow(df, textCol, idCol, n, k, bands)
-    val shape = df.sparkSession.conf.getOption(LshShapeKey)
-      .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("perband")
-    val candidates = shape match {
-      case "exploded" => minhashExplodedCandidates(narrow, bands, bands)
-      case s if s.startsWith("chunked") =>
-        minhashExplodedCandidates(narrow, bands,
-          s.stripPrefix("chunked").toInt)
-      case _ => minhashPerBandCandidates(narrow, bands)
-    }
-    (groups, repSets, candidates)
+    (groups, repSets, minhashPerBandCandidates(narrow, bands))
   }
 
-  /** Band-exploded enumeration in `ceil(bands/chunk)` self-joins over
-    * the posexploded (band ordinal, bucket hash) key, each row carrying
-    * its band-hash array; matched rows — one per (pair, colliding band)
-    * incidence, the SAME row count the per-band joins probe in total —
-    * pass the native `band_prefix_neq(bs_l, bs_r, band)` filter only at
-    * the pair's FIRST colliding band, so each candidate surfaces
-    * exactly once and the join needs NO distinct (the r15 exploded
-    * experiment's killer — its distinct materialized and shuffled the
-    * full collision multiplicity). `chunk = bands` is the single-join
-    * "exploded" shape (2 exchanges instead of 64). NOT the default:
-    * see [[LshShapeKey]] — at near-dup density the exploded sides
-    * outgrow the broadcast threshold and the resulting sort-merge
-    * join's duplicate-key group replay measured 35× slower than the
-    * broadcast-probed per-band shape.
-    */
-  private def minhashExplodedCandidates(narrow: DataFrame,
-      bands: Int, chunk: Int): DataFrame = {
-    require(chunk >= 1, s"chunk must be >= 1, got $chunk")
-    val bandArr = array((0 until bands).map(j => col(s"_b$j")): _*)
-    (0 until bands by chunk).map { c0 =>
-      val hi = math.min(c0 + chunk, bands)
-      val side = narrow
-        .select(col("id"), bandArr.as("_bs"),
-          posexplode(array((c0 until hi).map(j => col(s"_b$j")): _*))
-            .as(Seq("_bo", "_bh")))
-        .select(col("id"), col("_bs"),
-          (col("_bo") + lit(c0)).as("_band"), col("_bh"))
-      val l = side.toDF("id_l", "_bs_l", "_band_l", "_bh_l")
-      val r = side.toDF("id_r", "_bs_r", "_band_r", "_bh_r")
-      val firstCollision = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.BandPrefixNeq(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("_bs_l")),
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("_bs_r")),
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("_band_l"))))
-      l.join(r, col("_band_l") === col("_band_r") &&
-          col("_bh_l") === col("_bh_r") && col("id_l") < col("id_r"))
-        .filter(firstCollision)
-        .select(col("id_l").as("id_a"), col("id_r").as("id_b"))
-    }.reduce(_ unionAll _)
-  }
-
-  /** The default shape: one narrow join per band; a pair surfaces only
-    * at its first colliding band (the `noEarlier` conjunction), so the
-    * union is exactly the distinct candidate set. Never materializes
-    * the collision multiplicity, and the narrow rep frame broadcasts
-    * (hash probes, no buffered key groups) whenever it fits the
-    * threshold — see [[LshShapeKey]] for the measured comparison.
+  /** Exact candidate enumeration: one narrow join per band; a pair
+    * surfaces only at its first colliding band (the `noEarlier`
+    * conjunction), so the union is exactly the distinct candidate set.
+    * Never materializes the collision multiplicity, and the narrow rep
+    * frame broadcasts (hash probes, no buffered key groups) whenever it
+    * fits the threshold. Band-exploded self-joins with a first-collision
+    * filter were measured against it (r16, OPTIMIZATION_r16.md): ~2×
+    * faster at 1× duplication but ~35× slower at 10× near-dup density,
+    * where the exploded sides outgrow the broadcast threshold and the
+    * sort-merge join replays duplicate-key groups; per-band is robust to
+    * the duplication structure.
     */
   private def minhashPerBandCandidates(narrow: DataFrame,
       bands: Int): DataFrame =
@@ -495,7 +430,7 @@ object Dedup {
 
   /** Plan probe for PlanSpec (r16): the candidate-enumeration frame
     * BEFORE any downstream checkpoint, so the spec can pin the physical
-    * shape (one self-join, native first-collision filter, no distinct)
+    * shape (per-band joins, no distinct/aggregate)
     * — the enumeration is invisible in every GATE's final explain
     * because the core's outputs are localCheckpoint'd (`Scan
     * ExistingRDD` leaves). Builds the narrow frames (runs their
@@ -539,11 +474,11 @@ object Dedup {
 
     // exact verification: |A∩B| via the codegen'd sorted-merge expression
     // (shl is sorted), |A∪B| = na + nb - common — no hash-set builds.
-    graft.functions.SortedIntersectCount.register(df.sparkSession)
     val repPairs = candidates
       .join(repSets.toDF("id_a", "sh_a"), "id_a")
       .join(repSets.toDF("id_b", "sh_b"), "id_b")
-      .withColumn("common", expr("sorted_intersect_count(sh_a, sh_b)"))
+      .withColumn("common",
+        NativeFunctions.call(SortedIntersectCount.FnName, col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("common").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -601,11 +536,11 @@ object Dedup {
       threshold: Double = 0.8, fanout: Int = 8): DataFrame = {
     val (groups, repSets, narrow) =
       minhashNarrow(df, textCol, idCol, n, k, bands)
-    graft.functions.SortedIntersectCount.register(df.sparkSession)
     val edges = minhashCappedCandidates(narrow, bands, fanout)
       .join(repSets.toDF("id_a", "sh_a"), "id_a")
       .join(repSets.toDF("id_b", "sh_b"), "id_b")
-      .withColumn("common", expr("sorted_intersect_count(sh_a, sh_b)"))
+      .withColumn("common",
+        NativeFunctions.call(SortedIntersectCount.FnName, col("sh_a"), col("sh_b")))
       .withColumn("jaccard", col("common").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -621,9 +556,7 @@ object Dedup {
   }
 
   /** 64-bit SimHash over the distinct-word hash set (per-row, no shuffle):
-    * bit j is 1 iff more word hashes have bit j set than not. Callers
-    * must have a session — register via [[graft.functions.SimhashFromHashes]]
-    * (the public operators here do it for you).
+    * bit j is 1 iff more word hashes have bit j set than not.
     */
   def simhash(text: Column): Column =
     simhashFromHashes(transform(array_distinct(words(text)), w => xxhash64(w)))
@@ -635,7 +568,7 @@ object Dedup {
     * strict-majority model).
     */
   def simhashFromHashes(hashes: Column): Column =
-    call_function(graft.functions.SimhashFromHashes.FnName, hashes)
+    NativeFunctions.call(SimhashFromHashes.FnName, hashes)
 
   /** Engine-replayable 60-bit word hash: the first 15 hex digits of the
     * word's MD5 as a bigint. MD5 is a cross-engine standard, so an
@@ -656,7 +589,6 @@ object Dedup {
   def simhashDedupPairs(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxHamming: Int = 3,
       wordHash: Column => Column = w => xxhash64(w)): DataFrame = {
-    graft.functions.SimhashFromHashes.register(df.sparkSession)
     val sh = df
       .select(col(idCol),
         transform(filter(array_distinct(words(col(textCol))), w => length(w) > 0),
@@ -882,11 +814,10 @@ object Dedup {
     val refSets = sets(ref, "ref_id").collect().map(row =>
       (row.getLong(0),
         row.getSeq[Long](1).toArray))
-    val index = graft.functions.RefJaccardPairs.buildIndex(refSets.toSeq)
-    val indexLit = lit(graft.functions.RefJaccardPairs.serialize(index))
-    graft.functions.RefJaccardPairs.register(corpus.sparkSession)
+    val index = RefJaccardPairs.buildIndex(refSets.toSeq)
+    val indexLit = lit(RefJaccardPairs.serialize(index))
     c.select(col("corpus_id"),
-        explode(call_function(graft.functions.RefJaccardPairs.FnName,
+        explode(NativeFunctions.call(RefJaccardPairs.FnName,
           col("shl"), indexLit, lit(threshold))).as("m"))
       .select(col("corpus_id"), col("m.ref_id").as("ref_id"),
         round(col("m.jaccard"), 6).as("jaccard"))
@@ -936,10 +867,9 @@ object Dedup {
       .select(col(out), explode(hashedShinglesFromHashes(col("_wh"), n)).as("s"))
     val rPost = post(ref, "ref_id")
     val bloom = rPost.stat.bloomFilter("s", expectedItems, fpp)
-    graft.functions.BloomMightContain.register(corpus.sparkSession)
-    val bloomLit = lit(graft.functions.BloomMightContain.serialize(bloom))
+    val bloomLit = lit(BloomMightContain.serialize(bloom))
     post(corpus, "corpus_id")
-      .filter(call_function(graft.functions.BloomMightContain.FnName, col("s"), bloomLit))
+      .filter(NativeFunctions.call(BloomMightContain.FnName, col("s"), bloomLit))
       .join(rPost, "s")
       .groupBy("corpus_id", "ref_id")
       .agg(count(lit(1)).as("common"))
@@ -986,12 +916,11 @@ object Dedup {
     // a (probable) survivor — on a mostly-unique corpus the string
     // construction cost drops to ~the duplication rate; false
     // positives just build a string that dies in the exact join below.
-    graft.functions.BloomMightContain.register(df.sparkSession)
     val bloomLit: Option[Column] =
       if (!broadcastSurvivors) None
       else {
         val items = math.max(counts.count(), 1L) // checkpointed: cheap
-        Some(lit(graft.functions.BloomMightContain.serialize(
+        Some(lit(BloomMightContain.serialize(
           counts.stat.bloomFilter("_gh", items, 0.03))))
       }
     val texts = {
@@ -1007,7 +936,7 @@ object Dedup {
       def ghOf(i: Column) = element_at(col("_gh"), i + 1)
       val positions = sequence(lit(0), greatest(size(col("_w")) - n, lit(0)))
       val kept = bloomLit.fold(positions)(b => filter(positions, i =>
-        call_function(graft.functions.BloomMightContain.FnName, ghOf(i), b)))
+        NativeFunctions.call(BloomMightContain.FnName, ghOf(i), b)))
       base.select(explode(transform(kept,
           i => struct(ghOf(i).as("_gh"),
             concat_ws(" ", slice(col("_w"), i + 1, lit(n))).as("gram")))).as("p"))

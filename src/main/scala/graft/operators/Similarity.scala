@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import scala.util.Random
 
-import graft.functions.DotVec
+import graft.functions.{DotVec, NativeFunctions}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -24,9 +24,9 @@ object Similarity {
   /** Sequential-order dot product, matching DuckDB's list_dot_product on
     * DOUBLE[] (both fold left-to-right in double, so results are
     * bit-identical and safe to hash after rounding). Codegen'd native
-    * expression; every public operator here registers it first.
+    * expression, built directly — no session registration needed.
     */
-  def dot(a: Column, b: Column): Column = call_function(DotVec.FnName, a, b)
+  def dot(a: Column, b: Column): Column = NativeFunctions.call(DotVec.FnName, a, b)
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / sqrt(dot(a, a) * dot(b, b))
@@ -37,7 +37,6 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("q2", dot(col("qv"), col("qv"))))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
@@ -98,7 +97,6 @@ object Similarity {
   def binaryTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       oversample: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     def coded(df: DataFrame, id: String, code: String): DataFrame =
       df.select(col(idCol).as(id),
         binaryCode(col(vecCol), dim).as(code))
@@ -142,7 +140,6 @@ object Similarity {
   def randomProject(df: DataFrame, dim: Int, outDim: Int, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(outDim >= 1 && dim >= 1, "dims must be positive")
-    DotVec.register(df.sparkSession)
     val planes = hyperplanes(dim, outDim, seed)
     val scale = 1.0 / math.sqrt(outDim.toDouble)
     val v = col(vecCol).cast("array<double>")
@@ -204,7 +201,6 @@ object Similarity {
   def sqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       oversample: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     val (lo, hi) = sqCalibrate(corpus, dim, vecCol)
     val loLit = typedLit(lo.toSeq)
     val stepLit = typedLit(lo.indices.map(d => (hi(d) - lo(d)) / 255.0))
@@ -247,7 +243,6 @@ object Similarity {
     */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     // norms once per row, not per pair — the n² term is a single dot
     val a = corpus.select(col(idCol).as("id_a"), col(vecCol).as("va"))
       .withColumn("a2", dot(col("va"), col("va")))
@@ -287,7 +282,6 @@ object Similarity {
   def lshNearDupPairs(corpus: DataFrame, threshold: Double, dim: Int,
       nBits: Int = 12, nTables: Int = 6, seed: Long = 42,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     // signatures computed in the scan stage; only (id, table, sig) — three
     // longs per row — enters the bucket join and the candidate distinct,
     // so the nTables-amplified exchanges and the distinct's hash keys
@@ -346,7 +340,6 @@ object Similarity {
     */
   def kmeansCentroids(corpus: DataFrame, k: Int, dim: Int, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] = {
-    DotVec.register(corpus.sparkSession)
     var centroids = seedCentroids(corpus, k, idCol, vecCol)
     for (_ <- 0 until iters) {
       val assigned = corpus.select(col(vecCol).as("v"),
@@ -370,7 +363,6 @@ object Similarity {
     */
   def kmeansObjective(corpus: DataFrame, centroids: Array[Array[Double]],
       vecCol: String = "embedding"): Double = {
-    DotVec.register(corpus.sparkSession)
     corpus.select((lit(1.0) -
         cellsRanked(col(vecCol), centroids).getItem(0).getField("s")).as("d"))
       .agg(avg(col("d"))).collect()(0).getDouble(0)
@@ -471,7 +463,6 @@ object Similarity {
   def pqTrainCodebook(corpus: DataFrame, dim: Int, m: Int, nCodes: Int,
       iters: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    DotVec.register(corpus.sparkSession)
     val dsub = dim / m
     var cb = pqCodebook(corpus, dim, m, nCodes, idCol, vecCol)
     for (_ <- 0 until iters) {
@@ -501,7 +492,6 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       m: Int = 8, nCodes: Int = 16, refine: Int = 0, trainIters: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     val cb =
       if (trainIters > 0) pqTrainCodebook(corpus, dim, m, nCodes, trainIters, idCol, vecCol)
       else pqCodebook(corpus, dim, m, nCodes, idCol, vecCol)
@@ -589,7 +579,6 @@ object Similarity {
       nCells: Int = 16, nProbe: Int = 3, m: Int = 8, nCodes: Int = 16,
       refine: Int = 0, trainIters: Int = 0, pqTrainIters: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     val centroids =
       if (trainIters > 0) kmeansCentroids(corpus, nCells, dim, trainIters, idCol, vecCol)
       else seedCentroids(corpus, nCells, idCol, vecCol)
@@ -649,7 +638,6 @@ object Similarity {
   def diversitySample(corpus: DataFrame, nCells: Int, perCell: Int, dim: Int,
       trainIters: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     val centroids =
       if (trainIters > 0) kmeansCentroids(corpus, nCells, dim, trainIters, idCol, vecCol)
       else seedCentroids(corpus, nCells, idCol, vecCol)
@@ -676,7 +664,6 @@ object Similarity {
   def ivfAssignIncremental(archive: DataFrame, delta: DataFrame,
       nCells: Int = 16, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(archive.sparkSession)
     val centroids = seedCentroids(archive, nCells, idCol, vecCol)
     def assign(df: DataFrame, isDelta: Boolean) =
       df.select(col(idCol), cellExpr(col(vecCol), centroids).as("cell"),
@@ -696,7 +683,6 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       nCells: Int = 16, nProbe: Int = 3, trainIters: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    DotVec.register(corpus.sparkSession)
     val centroids =
       if (trainIters > 0) kmeansCentroids(corpus, nCells, dim, trainIters, idCol, vecCol)
       else seedCentroids(corpus, nCells, idCol, vecCol)

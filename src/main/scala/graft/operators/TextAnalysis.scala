@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{NativeFunctions, WindowMinima}
+
 /** Text analysis for training-data pipelines: language ID (stopword
   * n-gram heuristic), quality scoring (length/punctuation/stopword
   * ratios), token counting (whitespace + BPE-ish regex), and document
@@ -558,7 +560,7 @@ object TextAnalysis {
     */
   def fingerprintFromHashes(hs: Column, window: Int = 4, k: Int = 8): Column =
     slice(array_sort(array_distinct(
-      call_function(graft.functions.WindowMinima.FnName, hs, lit(window)))), 1, k)
+      NativeFunctions.call(WindowMinima.FnName, hs, lit(window)))), 1, k)
 
   /** `wordHash` defaults to `xxhash64` (production); pass
     * [[Dedup.md5WordHash]] to make the identical windowing/minima/k-smallest
@@ -567,7 +569,6 @@ object TextAnalysis {
   def fingerprints(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id",
       wordHash: Column => Column = w => xxhash64(w)): DataFrame = {
-    graft.functions.WindowMinima.register(df.sparkSession)
     df.select(col(idCol),
         transform(split(col(textCol), "\\s+"), wordHash).as("_h"))
       .select(col(idCol), fingerprintFromHashes(col("_h")).as("fingerprint"))
@@ -582,6 +583,6 @@ object TextAnalysis {
     * hash-checked against the DuckDB oracle rather than rows-only.
     */
   def fingerprintWords(text: Column, window: Int = 4, k: Int = 8): Column =
-    slice(array_sort(array_distinct(call_function(
-      graft.functions.WindowMinima.FnName, split(text, "\\s+"), lit(window)))), 1, k)
+    slice(array_sort(array_distinct(NativeFunctions.call(
+      WindowMinima.FnName, split(text, "\\s+"), lit(window)))), 1, k)
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{Joins, Skew}
+import graft.operators.PortableRound.r3
 import Qutil._
 
 /** Round-2 additions to the query canon: join shapes Spark lacks as
@@ -172,7 +173,7 @@ object AdvancedQueries {
       (s, d) => Skew.saltedAgg(ev(s, d), Seq("user_id"), saltBuckets = 16,
           partial = Seq(count(lit(1)).as("c"), sum(dec(col("value"))).as("v")),
           merge = Seq(sum(col("c")).as("cnt"),
-            round(sum(col("v")).cast("double"), 3).as("total_value")))
+            r3(sum(col("v")).cast("double")).as("total_value")))
         .orderBy("user_id"),
       Some("""SELECT user_id, count(*) AS cnt,
              |round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 3) AS total_value
@@ -200,7 +201,7 @@ object AdvancedQueries {
           .orderBy(unix_micros(col("ts")))
           .rangeBetween(-3600000000L, 0)
         ev(s, d).select(col("event_id"), col("user_id"), tsStr(col("ts")).as("ts"),
-            round(sum(dec(col("value"))).over(w).cast("double"), 3).as("trailing_1h_value"))
+            r3(sum(dec(col("value"))).over(w).cast("double")).as("trailing_1h_value"))
           .orderBy("event_id")
       },
       Some("""SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,

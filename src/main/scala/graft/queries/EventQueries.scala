@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Sessionize
+import graft.operators.PortableRound.r3
 import Qutil._
 
 /** The web-analytics query canon over the `events` table (SURVEY.md §2.4).
@@ -393,7 +394,7 @@ object EventQueries {
             totals, col("tv"), ascending = false, "rnk"),
           col("n_events"), ascending = false, "drnk", dense = true)
         ranked
-          .select(col("user_id"), round(col("tv").cast("double"), 3).as("total_value"),
+          .select(col("user_id"), r3(col("tv").cast("double")).as("total_value"),
             col("n_events"), col("rnk"), col("drnk"))
           .orderBy("user_id")
       },

@@ -631,13 +631,10 @@ object ExtensionQueries {
     // xxhash64 variant above stays rows-only: DuckDB can't replay Spark's
     // hash). Exploded to flat rows for robust value hashing.
     Q("text_fingerprint_words",
-      (s, d) => {
-        graft.functions.WindowMinima.register(s)
-        Tables.documents(s, d)
+      (s, d) => Tables.documents(s, d)
         .select(col("doc_id"), posexplode(
           TextAnalysis.fingerprintWords(col("text"))).as(Seq("pos", "gram")))
-        .orderBy("doc_id", "pos")
-      },
+        .orderBy("doc_id", "pos"),
       Some("""WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
              |fp AS (SELECT doc_id,
              |       list_sort(list_distinct(list_transform(range(greatest(len(w) - 3, 1)),

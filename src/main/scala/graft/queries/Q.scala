@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.operators.PortableRound
+
 /** One verifiable query: a Spark implementation plus (when SQL-expressible)
   * an equivalent DuckDB oracle over the same parquet tables.
   *
@@ -26,7 +28,7 @@ object Qutil {
   /** Exact decimal view of a 2-decimal double column (prices, values). */
   def dec(c: Column): Column = c.cast(DecimalType(18, 2))
   /** Order-independent sum of a 2-decimal double column, rendered as double. */
-  def dsum(c: Column): Column = round(sum(dec(c)).cast("double"), 3)
+  def dsum(c: Column): Column = PortableRound.r3(sum(dec(c)).cast("double"))
   /** Deterministic mean: exact integer/decimal sum divided once, rounded. */
   def dratio(num: Column, den: Column, scale: Int = 6): Column =
     round(num.cast("double") / den.cast("double"), scale)

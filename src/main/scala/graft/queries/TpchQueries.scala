@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.operators.PortableRound.r3
 import Qutil._
 
 /** Star-schema analytics over the TPC-H-ish tables (TESTDATA.md) — the
@@ -42,10 +43,10 @@ object TpchQueries {
         .agg(
           dsum(col("l_quantity")).as("sum_qty"),
           dsum(col("l_extendedprice")).as("sum_base_price"),
-          round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
-            .cast("double"), 3).as("sum_disc_price"),
-          round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))
-            * (one + dec(col("l_tax")))).cast("double"), 3).as("sum_charge"),
+          r3(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
+            .cast("double")).as("sum_disc_price"),
+          r3(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))
+            * (one + dec(col("l_tax")))).cast("double")).as("sum_charge"),
           dratio(sum(dec(col("l_quantity"))), count(lit(1))).as("avg_qty"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus"),
@@ -67,8 +68,8 @@ object TpchQueries {
         .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
         .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
-          .cast("double"), 3).as("revenue"),
+        .agg(r3(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
+          .cast("double")).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("n_name"),
       Some("""SELECT n_name,
@@ -87,7 +88,7 @@ object TpchQueries {
         .groupBy("l_suppkey")
         .agg(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))).as("rev"))
         .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), round(col("rev").cast("double"), 3).as("revenue"))
+        .select(col("s_suppkey"), col("s_name"), r3(col("rev").cast("double")).as("revenue"))
         .orderBy(col("rev").desc, col("s_suppkey"))
         .limit(10)
         .select("s_suppkey", "s_name", "revenue"),
@@ -114,7 +115,7 @@ object TpchQueries {
         .agg(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))).as("rev"))
         .orderBy(col("rev").desc, col("o_orderdate"), col("l_orderkey"))
         .limit(10)
-        .select(col("l_orderkey"), round(col("rev").cast("double"), 3).as("revenue"),
+        .select(col("l_orderkey"), r3(col("rev").cast("double")).as("revenue"),
           tsStr(col("o_orderdate")).as("o_orderdate"), col("o_orderpriority")),
       Some("""SELECT l_orderkey, round(CAST(rev AS DOUBLE), 3) AS revenue,
              |strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate, o_orderpriority FROM (
@@ -143,7 +144,7 @@ object TpchQueries {
         .orderBy(col("rev").desc, col("c_custkey"))
         .limit(20)
         .select(col("c_custkey"), col("c_name"), col("n_name"),
-          round(col("rev").cast("double"), 3).as("revenue")),
+          r3(col("rev").cast("double")).as("revenue")),
       Some("""SELECT c_custkey, c_name, n_name, round(CAST(rev AS DOUBLE), 3) AS revenue FROM (
              |  SELECT c_custkey, c_name, n_name,
              |         sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1.0 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev
@@ -167,8 +168,8 @@ object TpchQueries {
           col("o_custkey") === col("c_custkey") && col("c_nationkey") === col("s_nationkey"))
         .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
-          .cast("double"), 3).as("revenue"),
+        .agg(r3(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
+          .cast("double")).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("n_name"),
       Some("""SELECT n_name,
@@ -263,7 +264,7 @@ object TpchQueries {
         .limit(100)
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
           tsStr(col("o_orderdate")).as("o_orderdate"), col("o_totalprice"),
-          round(col("qty").cast("double"), 3).as("sum_qty")),
+          r3(col("qty").cast("double")).as("sum_qty")),
       Some("""SELECT c_custkey, c_name, o_orderkey,
              |strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate, o_totalprice,
              |round(CAST(qty AS DOUBLE), 3) AS sum_qty
@@ -289,8 +290,8 @@ object TpchQueries {
             col("l_quantity").between(10, 20)) ||
           (col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
             col("l_quantity").between(20, 30)))
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
-          .cast("double"), 3).as("revenue"),
+        .agg(r3(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount"))))
+          .cast("double")).as("revenue"),
           count(lit(1)).as("n_items")),
       Some("""SELECT
              |round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1.0 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 3) AS revenue,
@@ -393,8 +394,8 @@ object TpchQueries {
           dec(col("l_discount")).between(lit(0.02).cast(DecimalType(18, 2)),
             lit(0.04).cast(DecimalType(18, 2))) &&
           col("l_quantity") < 25)
-        .agg(round(sum(dec(col("l_extendedprice")) * dec(col("l_discount")))
-          .cast("double"), 3).as("revenue"),
+        .agg(r3(sum(dec(col("l_extendedprice")) * dec(col("l_discount")))
+          .cast("double")).as("revenue"),
           count(lit(1)).as("n_items")),
       Some("""SELECT
              |round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE), 3) AS revenue,
@@ -459,7 +460,7 @@ object TpchQueries {
         rev.join(broadcast(top), col("_rev") === col("_max"))
           .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
           .select(col("s_suppkey"), col("s_name"),
-            round(col("_rev").cast("double"), 3).as("total_revenue"))
+            r3(col("_rev").cast("double")).as("total_revenue"))
           .orderBy("s_suppkey")
       },
       Some("""WITH rev AS (
@@ -705,7 +706,7 @@ object TpchQueries {
             (dec(col("l_extendedprice")) * (one - dec(col("l_discount"))) -
               col("ps_supplycost") * dec(col("l_quantity"))).as("amount"))
           .groupBy("nation", "o_year")
-          .agg(round(sum(col("amount")).cast("double"), 3).as("profit"))
+          .agg(r3(sum(col("amount")).cast("double")).as("profit"))
           .orderBy(col("nation"), col("o_year").desc)
       },
       Some(s"""WITH $PartsuppCte

@@ -1,9 +1,11 @@
 package graft.weblog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.Locale
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ValidateWebLog
+import graft.functions.NativeFunctions
 
 /** DataFrame-level wrapper of the T1/T2/T4 "Lambda operators"
   * (SURVEY.md §2.2): strict schema validation + Ok/ProcessingFailed
@@ -14,21 +16,12 @@ import graft.functions.ValidateWebLog
   */
 object Validator {
 
-  private def fnName(dialect: String) = s"validate_weblog_$dialect"
-
-  /** Expose `validate_weblog_A/B` to both the Column and SQL surfaces. */
-  def register(spark: SparkSession): Unit = synchronized {
-    Seq("A", "B").foreach { d =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        fnName(d), exprs => ValidateWebLog(exprs.head, d), "built-in")
-    }
-  }
-
   /** Adds `valid: boolean`, `reason: string` next to the raw payload. */
   def validate(df: DataFrame, payloadCol: String = "payload",
       dialect: String = "B"): DataFrame = {
-    register(df.sparkSession)
-    df.withColumn("_vres", expr(s"${fnName(dialect)}($payloadCol)"))
+    df.withColumn("_vres",
+        NativeFunctions.call(s"validate_weblog_${dialect.toLowerCase(Locale.ROOT)}",
+          col(payloadCol)))
       .withColumn("valid", col("_vres.valid"))
       .withColumn("reason", col("_vres.reason"))
       .drop("_vres")

@@ -439,29 +439,16 @@ class PlanSpec extends SparkTestBase {
   test("exact LSH enumeration never distincts/aggregates candidate pairs") {
     // probed on the pre-checkpoint candidates frame — every gate's
     // final explain hides the enumeration behind the core's
-    // localCheckpoints. Both shapes emit each pair once at its first
-    // colliding band BY CONSTRUCTION; a Distinct/Aggregate appearing
-    // here means the collision multiplicity got materialized (the r15
-    // exploded experiment's killer, re-measured r16: the distinct-free
-    // invariant is what both shapes' economics rest on).
+    // localCheckpoints. The per-band joins emit each pair once at its
+    // first colliding band BY CONSTRUCTION; a Distinct/Aggregate
+    // appearing here means the collision multiplicity got materialized
+    // (the r15 exploded experiment's killer).
     val docs = Tables.documents(spark, sf001).select("doc_id", "text")
       .filter(org.apache.spark.sql.functions.col("doc_id") < 200)
-    // default (per-band): bands broadcast-probe joins, no distinct
+    // bands broadcast-probe joins, no distinct
     val p = operators.Dedup.minhashCandidatesPlanProbe(docs)
       .queryExecution.explainString(SimpleMode)
     assert(!p.contains("HashAggregate") && !p.contains("Distinct"),
       s"candidate pairs must not be distinct'd/aggregated:\n$p")
-    // exploded opt-in: ONE self-join, native first-collision filter
-    spark.conf.set(operators.Dedup.LshShapeKey, "exploded")
-    try {
-      val e = operators.Dedup.minhashCandidatesPlanProbe(docs)
-        .queryExecution.explainString(SimpleMode)
-      assert(e.contains("bandprefixneq"),
-        s"first-collision filter (band_prefix_neq) missing:\n$e")
-      val joins = e.linesIterator.count(l => l.contains("Join"))
-      assert(joins == 1, s"exploded shape must be ONE self-join, got $joins:\n$e")
-      assert(!e.contains("HashAggregate") && !e.contains("Distinct"),
-        s"exploded candidates must not be distinct'd (r15 killer):\n$e")
-    } finally spark.conf.unset(operators.Dedup.LshShapeKey)
   }
 }

@@ -106,7 +106,6 @@ class ExpressionPropertySpec extends SparkTestBase {
     val cases = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
     forAll(gen, n = 150)(hs => cases += hs)
     cases += Seq.empty // empty word set → 0L
-    graft.functions.SimhashFromHashes.register(spark)
     val df = cases.toSeq.zipWithIndex.map { case (hs, i) => (i, hs) }.toDF("id", "hs")
     val got = df
       .select(col("id"), graft.operators.Dedup.simhashFromHashes(col("hs")).as("sh"))

@@ -31,10 +31,8 @@ class HashedNgramsSpec extends SparkTestBase {
     transform(sequence(lit(0), greatest(size(col("wh")) - n, lit(0))),
       i => xxhash64(slice(col("wh"), i + 1, lit(n))))
 
-  private def nativeForm(n: Int) = {
-    HashedNgrams.register(spark)
+  private def nativeForm(n: Int) =
     call_function(HashedNgrams.FnName, col("wh"), lit(n))
-  }
 
   test("matches the HOF form on random word-hash arrays, all n") {
     val cases = Gen.zip(Gen.listOf(Gen.long), Gen.choose(2, 20))

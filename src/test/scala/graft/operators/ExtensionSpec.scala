@@ -546,7 +546,6 @@ class ExtensionSpec extends SparkTestBase {
 
   test("word winnowing: window minima, distinct, k smallest") {
     import spark.implicits._
-    graft.functions.WindowMinima.register(spark)
     val df = Seq("b a z y x w", "z q").toDF("text")
     val out = df.select(TextAnalysis.fingerprintWords(col("text"), 4, 8).as("fp"))
       .as[Seq[String]].collect()
